@@ -66,7 +66,14 @@ abstract class StreamingJobBase extends Serializable {
       // (HotSpot DontCompileHugeMethods) and run interpreted — fall back
       // to the non-codegen path instead of hitting that cliff
       .config("spark.sql.codegen.hugeMethodLimit", "8000")
-    StreamingJobBase.rocksDbStateConfs(rocksDbState)
+    // `file:` through graft.fs: without Hadoop's native library the stock
+    // local filesystem forks `chmod` per created file or directory and
+    // `readlink` for FileContext renames, ~117 processes per 2,000-ping
+    // ErrorAggregator trigger (state deltas, offset/commit logs, the
+    // sink's _spark_metadata log and parquet output). The override keeps
+    // the mode bits, FileContext's atomic rename, the .crc sidecars and
+    // Spark's checkpoint checksums as they are.
+    (StreamingJobBase.rocksDbStateConfs(rocksDbState) ++ graft.fs.LocalFs.sessionConfs)
       .foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
       .getOrCreate()
   }

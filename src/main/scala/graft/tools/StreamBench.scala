@@ -81,7 +81,8 @@ object StreamBench {
       if (args.length > 4) args(4).split(",").map(_.trim).toSet else Set.empty
     val rocksDb = graft.streaming.StreamingJobBase.envFlag("GRAFT_ROCKSDB_STATE")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.streaming.StreamingJobBase.rocksDbStateConfs(rocksDb)
+    val spark = (graft.streaming.StreamingJobBase.rocksDbStateConfs(rocksDb) ++
+        graft.fs.LocalFs.sessionConfs)
       .foldLeft(SparkSession.builder()
         .master(s"local[$cpus]")
         .config("spark.sql.shuffle.partitions", cpus)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object SparkTest {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val b = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
@@ -18,6 +18,10 @@ object SparkTest {
       // same codegen fallback regime as the Bench/Verify/job sessions,
       // so plan-pinning specs grade the plans those sessions execute
       .config("spark.sql.codegen.hugeMethodLimit", "8000")
+    // the jobs' `file:` filesystem, so checkpoint-restart specs run on
+    // the classes the jobs use
+    val s = graft.fs.LocalFs.sessionConfs
+      .foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

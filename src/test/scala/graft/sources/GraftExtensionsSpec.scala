@@ -17,7 +17,11 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark: SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    SparkSession.builder()
+    // if this spec runs first its session creates the JVM's SparkContext,
+    // whose Hadoop conf every later session shares: register graft.fs
+    // here too, or later specs would run on Hadoop's forking `file:`
+    graft.fs.LocalFs.sessionConfs
+      .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
       .master("local[2]")
       .appName("graft-extensions-test")
       .config("spark.sql.shuffle.partitions", "2")

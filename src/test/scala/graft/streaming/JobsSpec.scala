@@ -1,14 +1,18 @@
 package graft.streaming
 
 import graft.SparkTest
+import graft.fs.Forks
 import graft.monitoring.AccumulatorMetrics
 import graft.pings.TestMessages
 import graft.sinks.{DogStatsDMetricSink, HttpSink, RecordingTransport, StringHttpSink}
 import graft.sources.EnvelopeStore
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.net.DatagramSocket
-import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 class JobsSpec extends AnyFunSuite with SparkTest {
 
@@ -51,6 +55,15 @@ class JobsSpec extends AnyFunSuite with SparkTest {
     // partition values come back type-inferred (int) on read
     assert(out.select("submission_date_s3").distinct().collect()
       .map(_.get(0).toString).toSeq == Seq("20160407"))
+    // Hadoop's modes under its default umask, and a .crc beside each file
+    val written = Files.walk(Paths.get(outDir, "error_aggregator")).iterator.asScala.toSeq
+    written.foreach { p =>
+      val expected = if (Files.isDirectory(p)) "rwxr-xr-x" else "rw-r--r--"
+      assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(p)) == expected, p)
+    }
+    val (sums, files) = written.filterNot(Files.isDirectory(_))
+      .map(_.getFileName.toString).partition(_.endsWith(".crc"))
+    assert(files.nonEmpty && sums.toSet == files.map(f => s".$f.crc").toSet)
   }
 
   test("kafka source option map carries the reference's consumer tuning") {
@@ -97,17 +110,26 @@ class JobsSpec extends AnyFunSuite with SparkTest {
         timestamp = (baseSec + i) * 1000000000L).head.toBytes)
       .toDF("value")
 
-    def run(maxRows: Int): Unit = {
-      val q = Jobs.ErrorAggregatorJob.startWithSource(opts, pingStream(maxRows))
+    def run(pings: DataFrame): Unit = {
+      val q = Jobs.ErrorAggregatorJob.startWithSource(opts, pings)
       try q.processAllAvailable() finally q.stop()
     }
-    run(450)  // watermark 389 s → only window [0, 300) closes; the
-              // [300, 600) window is left mid-flight in checkpoint state
-    val firstHalf = spark.read.parquet(s"$outDir/error_aggregator/v2")
-    assert(firstHalf.select($"window_start").distinct().count() == 1,
-      "first run should emit exactly the one closed window")
-    run(1200) // resume AT 450 (mid-window): recovered state + new rows
-              // must merge; watermark 1139 s → [300,600) and [600,900) close
+    val (firstRun, restart) = (pingStream(450), pingStream(1200))
+    // Every process the JVM starts while the job runs. Its `file:`
+    // filesystem (graft.fs) must not fork for checkpoint or parquet
+    // files; Hadoop's stock one without native IO forks `chmod` and
+    // `readlink` ~100 times per trigger here.
+    val forks = Forks.during {
+      run(firstRun) // watermark 389 s → only window [0, 300) closes; the
+                    // [300, 600) window is left mid-flight in checkpoint state
+      val firstHalf = spark.read.parquet(s"$outDir/error_aggregator/v2")
+      assert(firstHalf.select($"window_start").distinct().count() == 1,
+        "first run should emit exactly the one closed window")
+      run(restart)  // resume AT 450 (mid-window): recovered state + new rows
+                    // must merge; watermark 1139 s → [300,600) and [600,900) close
+    }
+    assert(forks.isEmpty,
+      s"${forks.size} processes started, e.g. ${forks.distinct.take(5).mkString("; ")}")
     val out = spark.read.parquet(s"$outDir/error_aggregator/v2")
       .select($"window_start".cast("long").as("w"), $"experiment_id",
         $"main_crashes", $"count")
